@@ -1380,13 +1380,14 @@ def q_simsearch_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     return pq.pq_topk(coded, queries_df, books, k=10)
 
 
-def q_simsearch_ivf_pq(spark: SparkSession, sf: str) -> DataFrame:
-    """IVFPQ end-to-end (the FAISS workhorse): coarse 16-bucket inverted
-    file + 4-byte PQ codes on disk (64x smaller than float32) ->
-    partition-pruned probe that decodes the reconstruction in the score
-    expression. Centroids pinned to vec_id 0..15, codebooks derived from
-    the same rows; every stage (rounded-cosine tie-high assignment, PQ
-    encode argmin, probe, top-k) exactly replayed by the DuckDB oracle."""
+def _ivf_pq_index(
+    spark: SparkSession, sf: str, name: str
+) -> tuple[DataFrame, str, DataFrame]:
+    """(embeddings, index path, queries) for the IVFPQ entries. Centroids
+    pinned to vec_id 0..15, codebooks derived from the same rows. Each
+    entry ``name`` writes its own index directory: the entries may be
+    built concurrently, and a shared directory would be overwritten
+    under a running reader."""
     import tempfile
 
     from intake_esm_spark.operators import pq as _pq
@@ -1399,12 +1400,23 @@ def q_simsearch_ivf_pq(spark: SparkSession, sf: str) -> DataFrame:
     books = _pq.codebooks_from_rows(cents, m=_PQ_M)
     path = os.path.join(
         tempfile.gettempdir(),
-        f"spark_graft_ivfpq_oracle_{os.path.basename(sf.rstrip('/'))}",
+        f"spark_graft_{name}_{os.path.basename(sf.rstrip('/'))}",
     )
     simsearch.write_ivf_index_pq(emb, path, books, centroids=cents)
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    return emb, path, queries_df
+
+
+def q_simsearch_ivf_pq(spark: SparkSession, sf: str) -> DataFrame:
+    """IVFPQ end-to-end (the FAISS workhorse): coarse 16-bucket inverted
+    file + 4-byte PQ codes on disk (64x smaller than float32) ->
+    partition-pruned probe that decodes the reconstruction in the score
+    expression. Every stage (rounded-cosine tie-high assignment, PQ
+    encode argmin, probe, top-k) is exactly replayed by the DuckDB
+    oracle."""
+    _, path, queries_df = _ivf_pq_index(spark, sf, "ivfpq_oracle")
     out = simsearch.ivf_topk_indexed(spark, path, queries_df, k=10, nprobe=4)
     return out.select("query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"))
 
@@ -1416,24 +1428,7 @@ def q_simsearch_ivf_pq_rerank(spark: SparkSession, sf: str) -> DataFrame:
     the full float vectors (an id-keyed candidate-set-sized join) and
     the exact top-10. How a 100 TB deployment gets exact final scores
     without exact scan costs."""
-    import tempfile
-
-    from intake_esm_spark.operators import pq as _pq
-
-    emb = load_table(spark, sf, "embeddings")
-    cents = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.filter(F.col("vec_id") < 16).orderBy("vec_id").collect()
-    ]
-    books = _pq.codebooks_from_rows(cents, m=_PQ_M)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ivfpq_oracle_{os.path.basename(sf.rstrip('/'))}",
-    )
-    simsearch.write_ivf_index_pq(emb, path, books, centroids=cents)
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    emb, path, queries_df = _ivf_pq_index(spark, sf, "ivfpq_rerank_oracle")
     out = simsearch.ivf_topk_rerank(
         spark, path, queries_df, emb, k=10, nprobe=4
     )

@@ -16,9 +16,10 @@ on a lazy Spark DataFrame:
   analogue) (core.py:607-894)
 * ``serialize`` (core.py:513-565)
 
-The datastore never holds collected rows — only the descriptor (metadata)
-and the DataFrame plan, so the same handle works against a 100 TB catalog
-on a cluster.
+The datastore never holds asset or catalog rows — only the descriptor
+(metadata), the DataFrame plan and, once asked, one row per dataset group
+(bounded by ``MAX_DATASET_KEYS``), so the same handle works against a
+100 TB catalog on a cluster.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from __future__ import annotations
 import copy
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,11 +63,11 @@ class ESMDataStore:
         self.derivedcat = registry or DerivedVariableRegistry()
         self._requested_variables = requested_variables or []
         self.sep = sep
-        # _df is immutable per instance, so the group-attr profile (a
-        # catalog aggregation job) and the key list are computed at most
-        # once per datastore
-        self._attrs_cache: list[str] | None = None
-        self._keys_cache: list[str] | None = None
+        # _df is immutable per instance, so the null profile (per
+        # aggregate flag) and the group summary (per attrs tuple) — one
+        # catalog aggregation each — run at most once per datastore
+        self._attrs_cache: dict[bool, list[str]] = {}
+        self._summaries: dict[tuple[str, ...], list[Row]] = {}
         self._validate_registry()
 
     # -- construction --------------------------------------------------------
@@ -145,37 +146,50 @@ class ESMDataStore:
 
     # -- grouping / keys -------------------------------------------------------
 
-    def _effective_attrs(self) -> list[str]:
-        if self._attrs_cache is None:
-            self._attrs_cache = grouping.effective_groupby_attrs(
+    def _effective_attrs(self, aggregate: bool = True) -> list[str]:
+        """The grouping attrs after the null rules; ``aggregate=False``
+        groups by every usable column."""
+        if aggregate not in self._attrs_cache:
+            self._attrs_cache[aggregate] = grouping.effective_groupby_attrs(
                 self._df,
-                self.descriptor.groupby_attrs,
+                self.descriptor.groupby_attrs if aggregate else [],
                 self.descriptor.aggregation_control is not None,
             )
-        return self._attrs_cache
+        return self._attrs_cache[aggregate]
+
+    def _summary(
+        self, api: str, aggregate: bool = True, sep: str | None = None
+    ) -> list[tuple[str, Row]]:
+        """``(key, row)`` per dataset group of grouping.group_summary: ONE
+        bounded catalog collect, cached per attrs tuple, answers keys(),
+        len(), ``in``, attrs_for() and to_dataset_dict()'s emptiness, keys
+        and variable sets, for any ``sep``. Variable sets are collected
+        only when derived variables need them."""
+        attrs = tuple(self._effective_attrs(aggregate))
+        if attrs not in self._summaries:
+            var_col = self.descriptor.variable_column_name
+            summary = grouping.group_summary(
+                self._df, list(attrs), var_col if len(self.derivedcat) else None
+            )
+            self._summaries[attrs] = self._bounded_key_collect(summary, api)
+        sep = sep or self.sep
+        return [(sep.join(r["__str"]), r) for r in self._summaries[attrs]]
 
     @property
     def key_template(self) -> str:
-        attrs = self._effective_attrs()
-        return self.sep.join(attrs)
+        return self.sep.join(self._effective_attrs())
 
     def keys(self) -> list[str]:
-        if self._keys_cache is None:
-            attrs = self._effective_attrs()
-            keys_df = grouping.group_keys(self._df, attrs, self.sep).select("key")
-            self._keys_cache = sorted(
-                r["key"] for r in self._bounded_key_collect(keys_df, "keys()")
-            )
-        return self._keys_cache
+        return sorted(k for k, _ in self._summary("keys()"))
 
     def _bounded_key_collect(self, keys_df: DataFrame, api: str) -> list:
         """Guarded driver-side collect for APIs whose CONTRACT is a Python
-        list/dict keyed by dataset group (keys(), to_dataset_dict(), mirroring
-        the reference's dict-of-datasets API). The collect is bounded by
-        dataset-GROUP count, not rows — generous for any real catalog (the
-        reference's largest cited catalog has ~27k assets) — but a catalog
-        whose groupby attrs have pathological cardinality gets a diagnostic
-        steering to keys_info() (a DataFrame) instead of a driver OOM."""
+        list/dict/count of dataset groups (keys(), len(), to_dataset_dict(),
+        as the reference's dict-of-datasets API). Bounded by dataset-GROUP
+        count, not rows — generous for any real catalog (the reference's
+        largest cited catalog has ~27k assets) — a catalog whose groupby
+        attrs have pathological cardinality gets a diagnostic steering to
+        keys_info() (a DataFrame) instead of a driver OOM."""
         rows = keys_df.limit(MAX_DATASET_KEYS + 1).collect()
         if len(rows) > MAX_DATASET_KEYS:
             raise ValueError(
@@ -188,48 +202,43 @@ class ESMDataStore:
 
     def keys_info(self) -> DataFrame:
         """One row per dataset key with its group attribute values."""
-        attrs = self._effective_attrs()
-        return grouping.group_keys(self._df, attrs, self.sep)
+        return grouping.group_keys(self._df, self._effective_attrs(), self.sep)
 
     def attrs_for(self, key: str) -> dict[str, Any]:
         """Dataset metadata for one group: ``<attrs_prefix>:<attr> -> value``
         plus the dataset key (reference F10, source.py:140-150)."""
         from intake_esm_spark.options import OPTIONS
 
-        attrs = self._effective_attrs()
-        rows = (
-            grouping.group_keys(self._df, attrs, self.sep)
-            .filter(F.col("key") == key)
-            .collect()
-        )
-        if not rows:
+        row = next((r for k, r in self._summary("attrs_for()") if k == key), None)
+        if row is None:
             raise KeyError(key)
-        row = rows[0]
         prefix = OPTIONS["attrs_prefix"]
-        out = {f"{prefix}:{a}": row[a] for a in attrs}
+        out = {f"{prefix}:{a}": row[a] for a in self._effective_attrs()}
         out[OPTIONS["dataset_key"]] = key
         return out
 
     def __len__(self) -> int:
-        attrs = self._effective_attrs()
-        return self._df.select(*attrs).distinct().count()
+        """Number of dataset groups (distinct attr tuples). Above
+        ``MAX_DATASET_KEYS`` groups it raises the same ValueError as
+        keys(), steering to keys_info()."""
+        return len(self._summary("len()"))
 
     def __contains__(self, key: str) -> bool:
-        return key in set(self.keys())
+        return any(k == key for k, _ in self._summary("`in`"))
 
     def __getitem__(self, key: str) -> DataFrame:
         """Catalog rows of one dataset group (reference: the records that
         feed one ESMDataSource, core.py:311-341). An unknown key raises
         KeyError like the reference (core.py:343-345) — a silently empty
         DataFrame gives downstream code zero rows with no diagnostic.
-        The key list is cached per instance, so repeated access costs no
-        extra jobs."""
+        The group summary is cached per instance, so repeated access
+        costs no extra jobs."""
         if key not in self:
             raise KeyError(
                 f"{key!r} not found in catalog; available keys: {self.keys()[:20]}"
             )
-        attrs = self._effective_attrs()
-        return self._df.filter(grouping.key_column(attrs, self.sep) == key)
+        key_col = grouping.key_column(self._effective_attrs(), self.sep)
+        return self._df.filter(key_col == key)
 
     # -- profiling ---------------------------------------------------------------
 
@@ -300,7 +309,7 @@ class ESMDataStore:
             reg._registry = derived_subset
         else:
             reg = self.derivedcat
-        out = self.__class__(
+        return self.__class__(
             self.spark,
             new_desc,
             results,
@@ -308,7 +317,6 @@ class ESMDataStore:
             requested_variables=requested,
             sep=self.sep,
         )
-        return out
 
     # -- dataset assembly -------------------------------------------------------------
 
@@ -326,6 +334,9 @@ class ESMDataStore:
         views of it (cheap — Catalyst prunes files by the pushed key
         predicate when assets are partitioned by group attrs).
 
+        Emptiness, keys and per-key variables come from the one cached
+        group summary (``_summary``), never from a scan of asset data.
+
         ``preprocess`` (reference U4, core.py:611 / source.py:105-111): a
         ``DataFrame -> DataFrame`` transformation applied to the combined
         long-format rows before grouping — the Spark-idiomatic equivalent
@@ -333,9 +344,12 @@ class ESMDataStore:
         attributes, so per-asset logic is a filter away).
         """
         sep = sep or self.sep
-        if self._df.isEmpty():
+        summary = self._summary("to_dataset_dict()", aggregate, sep)
+        if not summary:
             return {}
-        combined, attrs = self._combined_plan(aggregate, requested_variables, sep=sep)
+        combined = self._combined_plan(
+            self._effective_attrs(aggregate), requested_variables, sep
+        )
         if preprocess is not None:
             combined = preprocess(combined)
             # a preprocess may drop whole groups, so only then is a key
@@ -347,29 +361,20 @@ class ESMDataStore:
                 )
             ]
         else:
-            # keys come from the CATALOG — one metadata-scale job, never
-            # a distinct scan over asset-scale data (same reasoning as
-            # _catalog_dataset_variables)
-            keys = [
-                r["key"]
-                for r in self._bounded_key_collect(
-                    grouping.group_keys(self._df, attrs, sep).select("key"),
-                    "to_dataset_dict()",
-                )
-            ]
+            keys = [k for k, _ in summary]
         datasets = {k: combined.filter(F.col("key") == k) for k in sorted(keys)}
         var_col = self.descriptor.variable_column_name
         if len(self.derivedcat) and var_col:
             long_var_col = "variable" if "variable" in combined.columns else var_col
-            # per-group variable sets come from the CATALOG — one
-            # metadata-scale aggregation job — instead of a distinct() probe
-            # scan of every dataset's asset rows (one full-data job per
-            # group). A user preprocess may add/drop variables the catalog
-            # cannot know about, so only then fall back to probing.
+            # per-group variable sets come from the summary instead of a
+            # distinct() probe scan of every dataset's asset rows (one
+            # full-data job per group). A user preprocess may add/drop
+            # variables the catalog cannot know about, so only then fall
+            # back to probing.
             dataset_variables = None
             if preprocess is None:
                 dataset_variables = self._catalog_dataset_variables(
-                    attrs, sep, requested_variables
+                    summary, requested_variables
                 )
             datasets = self.derivedcat.update_datasets(
                 datasets,
@@ -381,32 +386,19 @@ class ESMDataStore:
 
     def _catalog_dataset_variables(
         self,
-        attrs: list[str],
-        sep: str,
+        summary: list[tuple[str, Row]],
         requested_variables: list[str] | None,
     ) -> dict[str, set[str]]:
-        """Per-dataset-key variable sets read off the catalog table.
+        """Per-dataset-key variable sets read off the group summary.
 
-        The catalog declares which variables each asset carries, so the
-        union per group key is one tiny aggregation over catalog rows —
-        derived-variable application then needs ZERO extra scans of asset
-        data. Respects the requested-variables projection (literal names
-        and compiled patterns) exactly as combine.open_asset_union applies
-        it to the data rows."""
+        The catalog declares which variables each asset carries, so
+        derived-variable application needs ZERO extra scans of asset data.
+        Respects the requested-variables projection (literal names and
+        compiled patterns) exactly as combine.open_asset_union applies it
+        to the data rows."""
         import re as _re
 
-        var_col = self.descriptor.variable_column_name
-        keyed = self._df.withColumn(
-            "key", F.concat_ws(sep, *[F.col(a).cast("string") for a in attrs])
-        )
-        if isinstance(keyed.schema[var_col].dataType, T.ArrayType):
-            agg = F.array_distinct(
-                F.array_compact(F.flatten(F.collect_set(F.col(var_col))))
-            )
-        else:
-            agg = F.collect_set(F.col(var_col))
-        rows = keyed.groupBy("key").agg(agg.alias("__vars")).collect()
-        out = {r["key"]: set(r["__vars"] or []) for r in rows}
+        out = {k: set(r["__vars"] or []) for k, r in summary}
         requested = requested_variables or self._requested_variables or None
         if requested:
             literals = {v for v in requested if isinstance(v, str)}
@@ -422,20 +414,8 @@ class ESMDataStore:
         return out
 
     def _combined_plan(
-        self,
-        aggregate: bool,
-        requested_variables: list[str] | None,
-        sep: str | None = None,
-    ) -> tuple[DataFrame, list[str]]:
-        sep = sep or self.sep
-        desc = self.descriptor
-        if not aggregate:
-            desc = copy.deepcopy(desc)
-            if desc.aggregation_control:
-                desc.aggregation_control.groupby_attrs = []
-        attrs = grouping.effective_groupby_attrs(
-            self._df, desc.groupby_attrs, desc.aggregation_control is not None
-        )
+        self, attrs: list[str], requested_variables: list[str] | None, sep: str
+    ) -> DataFrame:
         requested = requested_variables or self._requested_variables or None
         # the public key is computed on the CATALOG side (its attrs may
         # collide with asset data columns, e.g. `variable`), then attached
@@ -443,17 +423,13 @@ class ESMDataStore:
         # (exact files vs pruned directory scans) happens inside
         # open_asset_union so a huge catalog never lists every asset on
         # the driver
-        cat_keyed = self._df.withColumn(
-            "key", F.concat_ws(sep, *[F.col(a).cast("string") for a in attrs])
-        )
-        combined = open_asset_union(
+        return open_asset_union(
             self.spark,
-            cat_keyed,
-            desc,
+            self._df.withColumn("key", grouping.key_column(attrs, sep)),
+            self.descriptor,
             requested_variables=requested,
             extra_catalog_columns=["key"] + attrs,
         )
-        return combined, attrs
 
     def to_dataframe(
         self,
@@ -463,8 +439,9 @@ class ESMDataStore:
         """The whole result as ONE DataFrame with a ``key`` column — the
         scale-friendly alternative to a dict of datasets (and the analogue
         of ``to_dask`` when exactly one group matches)."""
-        combined, _ = self._combined_plan(aggregate, requested_variables)
-        return combined
+        return self._combined_plan(
+            self._effective_attrs(aggregate), requested_variables, self.sep
+        )
 
     def to_datatree(self, **kwargs: Any) -> dict[str, DataFrame]:
         """Dataset dict keyed by '/'-joined paths (reference core.py:765-867).
@@ -494,7 +471,8 @@ class ESMDataStore:
         group attributes (default) — the scale-path sink: downstream reads
         of one dataset group become partition-pruned scans, and re-assembly
         never touches the other groups' files."""
-        combined, attrs = self._combined_plan(True, requested_variables)
+        attrs = self._effective_attrs()
+        combined = self._combined_plan(attrs, requested_variables, self.sep)
         partition_by = partition_by if partition_by is not None else attrs
         writer = combined.write.mode(mode)
         if partition_by:

@@ -47,10 +47,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(tokens)
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 # ASCII punctuation as an explicit range class — identical in Java regex and
 # RE2 (Java's \p{Punct} has no RE2 equivalent, so oracles couldn't match it)
 _PUNCT_CLASS = r"[!-/:-@\[-`{-~]"
@@ -67,12 +63,6 @@ def digit_ratio(text: Column) -> Column:
     n = F.length(text)
     digits = n - F.length(F.regexp_replace(text, r"[0-9]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(digits / n)
-
-
-def uppercase_ratio(text: Column) -> Column:
-    n = F.length(text)
-    uppers = n - F.length(F.regexp_replace(text, r"[A-Z]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(uppers / n)
 
 
 def mean_word_length(text: Column) -> Column:

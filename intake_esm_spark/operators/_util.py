@@ -19,9 +19,20 @@ session always plans the same initial partition count, and iterative
 fits rebuild semantically identical frames every pass (ADVICE r15: the
 ADF moment passes re-paid a full driver-side physical-planning
 conversion per pass on their lagged-join frame just to re-learn its
-width).  A session that changes ``spark.sql.shuffle.partitions``
-mid-flight could read a stale width — that only shapes execution, never
-values, and no code path here does so."""
+width).
+
+Staleness: a memoized width can be stale when a plan with the same
+hash plans differently later in the application — a session that
+changes ``spark.sql.shuffle.partitions`` mid-flight, or a path that is
+overwritten with a different file layout and read again.  A stale
+width only decides whether ``_spread`` adds one round-robin shuffle:
+it shapes execution, never values.
+
+Bounded: cleared whenever it reaches ``_WIDTH_MEMO_MAX`` entries, so a
+long-lived driver that builds many distinct plans holds at most that
+many small entries."""
+
+_WIDTH_MEMO_MAX = 4096
 
 
 # r15 NOTE: a `_pin_partitioned` helper lived here during the graph-
@@ -72,6 +83,8 @@ def _spread(df: DataFrame) -> DataFrame:
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
+            if len(_WIDTH_MEMO) >= _WIDTH_MEMO_MAX:
+                _WIDTH_MEMO.clear()
             _WIDTH_MEMO[key] = n
     if n >= target:
         return df

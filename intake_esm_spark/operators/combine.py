@@ -33,6 +33,8 @@ coords and retained" rule is automatic.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -162,6 +164,10 @@ def _scan_plan(
     return by_fmt, False
 
 
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
 def _read_format(spark: SparkSession, fmt: str, fpaths: list[str]) -> DataFrame:
     """One scan per format, each row tagged with its source asset path."""
     tar_paths = [p for p in fpaths if asset_readers.is_tar_url(p)]
@@ -179,15 +185,12 @@ def _read_format(spark: SparkSession, fmt: str, fpaths: list[str]) -> DataFrame:
             # mapping below can't ever match — tag each manifest's rows
             # with its original tar:// URL directly (same per-manifest
             # tagging as the non-tar reference branch)
-            parts = [
+            tar_df = _union([
                 asset_readers.read_assets(spark, fmt, [local]).withColumn(
                     "__asset_path", _norm(F.lit(orig))
                 )
                 for orig, local in staged.items()
-            ]
-            tar_df = parts[0]
-            for p in parts[1:]:
-                tar_df = tar_df.unionByName(p, allowMissingColumns=True)
+            ])
         else:
             tagged = None
             for orig, local in staged.items():
@@ -202,22 +205,16 @@ def _read_format(spark: SparkSession, fmt: str, fpaths: list[str]) -> DataFrame:
             ).withColumn("__asset_path", tagged)
         if not plain:
             return tar_df
-        return _read_format(spark, fmt, plain).unionByName(
-            tar_df, allowMissingColumns=True
-        )
+        return _union([_read_format(spark, fmt, plain), tar_df])
     if fmt == "reference":
         # manifest source: tag member rows with the MANIFEST path (the
         # catalog row points at the manifest, not the member files)
-        parts = [
+        return _union([
             asset_readers.read_assets(spark, fmt, [m]).withColumn(
                 "__asset_path", _norm(F.lit(m))
             )
             for m in fpaths
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        ])
     df = asset_readers.read_assets(spark, fmt, fpaths)
     if "__asset_path" in df.columns:  # reader-provided (e.g. netcdf ingest)
         return df.withColumn("__asset_path", _norm(F.col("__asset_path")))
@@ -253,10 +250,9 @@ def open_asset_union(
     attach = list(dict.fromkeys(join_new_attrs + (extra_catalog_columns or [])))
 
     by_fmt, strict = _scan_plan(catalog, desc, max_driver_paths)
-    scans = [_read_format(spark, fmt, fpaths) for fmt, fpaths in by_fmt.items()]
-    assets = scans[0]
-    for s in scans[1:]:
-        assets = assets.unionByName(s, allowMissingColumns=True)
+    assets = _union(
+        [_read_format(spark, fmt, fpaths) for fmt, fpaths in by_fmt.items()]
+    )
 
     # catalog columns that collide with asset data columns are not attached
     # (e.g. aggregate=False groups by ALL catalog columns, including an
@@ -295,14 +291,11 @@ def open_asset_union(
     match_cols = []
     for lvl in range(_ANCESTOR_LEVELS + 1):
         key_col = "__asset_path" if lvl == 0 else f"__anc{lvl}"
-        if lvl == 1:
+        if lvl > 0:
             combined = combined.withColumn(
-                key_col, F.regexp_replace(F.col("__asset_path"), r"/[^/]*$", "")
+                key_col, F.regexp_replace(F.col(prev_col), r"/[^/]*$", "")
             )
-        elif lvl > 1:
-            combined = combined.withColumn(
-                key_col, F.regexp_replace(F.col(f"__anc{lvl - 1}"), r"/[^/]*$", "")
-            )
+        prev_col = key_col
         cat_lvl = cat_side.select(
             F.col("__cat_path").alias(key_col),
             F.col("__cat").alias(f"__cat_{lvl}"),

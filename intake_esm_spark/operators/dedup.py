@@ -161,24 +161,6 @@ def dedup_exact(
     )
 
 
-def minhash_signature(
-    text_col: str, num_hashes: int = 32, shingle_n: int = 5
-) -> F.Column:
-    """array<bigint> MinHash signature: for permutation i, the min over
-    shingles of (a_i * portable_hash60(shingle) + b_i) mod p — the
-    engine-portable universal-hash family (see ``perm_coeffs``),
-    deterministic across runs AND engines (a SQL oracle recomputes it
-    bit-exactly)."""
-    sh = F.transform(shingles(F.col(text_col), shingle_n), portable_hash60)
-    sigs = [
-        F.array_min(
-            F.transform(sh, lambda h, a=a, b=b: (F.lit(a) * (h % MERSENNE_P) + F.lit(b)) % MERSENNE_P)
-        )
-        for a, b in perm_coeffs(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -365,6 +347,12 @@ def jaccard_pairs(
     subset would let boilerplate slip back in whenever the subset is small
     (df within subset <= cap < corpus df), making results depend on the
     candidate set and diverge from both the all-pairs pass and the oracle.
+
+    The all-pairs path (``candidates=None``) pins nothing: it scans and
+    shingles the input once only through Spark's exchange reuse of the
+    identical self-join sides (``spark.sql.exchange.reuse``, on by
+    default). With reuse off, or when AQE plans the sides differently,
+    the scan runs twice; the values are the same.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
     """
@@ -953,36 +941,6 @@ def dedup_components(
     )
     dropped = cc.select(id_col).join(survivors, id_col, "left_anti")
     return df.join(dropped, on=id_col, how="left_anti")
-
-
-def simhash_of_hashes(hashes: F.Column, bits: int = 64) -> F.Column:
-    """SimHash sketch from an ALREADY-MATERIALIZED array<bigint> of shingle
-    hashes: per bit, sum +1/-1 votes over the hashes; sketch bit = sign.
-    Expects an attribute reference — the 64 per-bit aggregates each walk the
-    array, so the array must be a materialized column, not an inline
-    expression tree (which would re-shingle the document 64 times)."""
-    def _bit_voter(b: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_cols = []
-    for b in range(bits):
-        vote = F.aggregate(hashes, F.lit(0), _bit_voter(b))
-        bit = F.when(vote > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bit_cols.append(F.shiftleft(bit, b))
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
-
-
-def simhash(text_col: str, shingle_n: int = 5, bits: int = 64) -> F.Column:
-    """Single-expression SimHash (convenience form — re-walks the shingle
-    pipeline per bit; hot paths should project the hash array first and use
-    ``simhash_of_hashes``)."""
-    sh = F.array_distinct(shingles(F.col(text_col), shingle_n))
-    return simhash_of_hashes(F.transform(sh, portable_hash60), bits)
 
 
 def simhash_candidates(

@@ -15,7 +15,8 @@ Reference semantics (/root/reference/intake_esm/cat.py):
   (cat.py:404-407, 570-579)
 
 All of these are single-pass Spark aggregations — the null-profile
-pre-pass is ONE ``agg`` over every attr (not a scan per column), and
+pre-pass is ONE ``agg`` over every attr (not a scan per column),
+``group_summary`` is one grouped aggregate per datastore, and
 unique/nunique likewise aggregate all columns in one job each.
 """
 
@@ -32,21 +33,24 @@ class MixedNullColumnError(ValueError):
 
 def null_profile(df: DataFrame, columns: list[str]) -> dict[str, str]:
     """Classify each column as 'all_null' | 'no_null' | 'mixed' in ONE
-    aggregation pass."""
+    aggregation pass.
+
+    Only duplicate-agnostic aggregates (min/max of ``isNull``), so when
+    ``df`` ends in a ``dropDuplicates`` (a derived-variable search) the
+    optimizer drops that shuffle from this pass. Empty input gives null
+    for both, which classifies as 'all_null'."""
     if not columns:
         return {}
-    # one shared total + one non-null count per column (a per-column
-    # count(1) would double the aggregation state for the same answer)
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for c in columns:
-        aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))
+    aggs = []
+    for i, c in enumerate(columns):
+        aggs.append(F.max(F.col(c).isNull()).alias(f"__any{i}"))
+        aggs.append(F.min(F.col(c).isNull()).alias(f"__all{i}"))
     row = df.agg(*aggs).collect()[0]
     out = {}
-    for c in columns:
-        non_null, total = row[f"__nn_{c}"], row["__total"]
-        if non_null == 0:
+    for i, c in enumerate(columns):
+        if row[f"__all{i}"] is not False:
             out[c] = "all_null"
-        elif non_null == total:
+        elif row[f"__any{i}"] is False:
             out[c] = "no_null"
         else:
             out[c] = "mixed"
@@ -58,26 +62,22 @@ def effective_groupby_attrs(
 ) -> list[str]:
     """Apply the all-null-drop / mixed-null-error / fall-back-to-all-columns
     rules and return the attrs actually used for grouping."""
-    attrs = list(groupby_attrs) if has_aggregation_control else []
-    if attrs:
-        profile = null_profile(df, attrs)
+
+    def fully_populated(columns: list[str]) -> list[str]:
+        profile = null_profile(df, columns)
         mixed = [c for c, s in profile.items() if s == "mixed"]
         if mixed:
             raise MixedNullColumnError(
                 f"group-by columns {mixed} mix null and non-null values; "
                 "they must be all-null (dropped) or fully populated"
             )
-        attrs = [c for c in attrs if profile[c] == "no_null"]
+        return [c for c in columns if profile[c] == "no_null"]
+
+    attrs = fully_populated(list(groupby_attrs)) if has_aggregation_control else []
     if attrs and set(attrs) != set(df.columns):
         return attrs
     # fall back to all (non-all-null, non-mixed) columns
-    profile = null_profile(df, list(df.columns))
-    mixed = [c for c, s in profile.items() if s == "mixed"]
-    if mixed:
-        raise MixedNullColumnError(
-            f"group-by columns {mixed} mix null and non-null values"
-        )
-    return [c for c in df.columns if profile[c] == "no_null"]
+    return fully_populated(list(df.columns))
 
 
 def key_column(attrs: list[str], sep: str = ".") -> F.Column:
@@ -91,6 +91,34 @@ def group_keys(df: DataFrame, attrs: list[str], sep: str = ".") -> DataFrame:
     return (
         df.select(key_column(attrs, sep), *attrs)
         .distinct()
+    )
+
+
+def group_summary(
+    df: DataFrame, attrs: list[str], with_variables: str | None = None
+) -> DataFrame:
+    """One row per distinct ``attrs`` tuple, in ONE grouped aggregate:
+    the raw ``attrs`` values; ``__str``, those values cast to string
+    (effective attrs are null-free, so ``sep.join(__str)`` equals
+    :func:`key_column` for every ``sep``); and, when ``with_variables``
+    names the variable column, ``__vars``, its distinct (flattened)
+    values in the group. With no attrs the aggregate is global and yields
+    one row even on empty input; the ``__n`` filter drops it. Every
+    aggregate is duplicate-agnostic, so the optimizer drops a trailing
+    ``dropDuplicates`` of ``df`` (a derived-variable search) from the
+    plan."""
+    aggs = [F.max(F.lit(1)).alias("__n")]
+    if with_variables is not None:
+        values = F.collect_set(F.col(with_variables))
+        if _is_array(df.schema[with_variables].dataType):
+            values = F.array_distinct(F.array_compact(F.flatten(values)))
+        aggs.append(values.alias("__vars"))
+    return (
+        df.groupBy(*attrs)
+        .agg(*aggs)
+        .filter(F.col("__n").isNotNull())
+        .withColumn("__str", F.array(*[F.col(a).cast("string") for a in attrs]))
+        .drop("__n")
     )
 
 

@@ -66,17 +66,6 @@ def _sub(vec: Column, j: int, dsub: int) -> Column:
     return F.slice(vec, j * dsub + 1, dsub)
 
 
-def _sq_dist(sub: Column, centroid: list[float]) -> Column:
-    """6dp-rounded squared L2 distance of a subvector to a literal
-    centroid — one fixed-order fold (zip then sum), so every engine
-    computes the identical double before the shared rounding."""
-    cl = F.array(*[F.lit(float(v)) for v in centroid])
-    diffs = F.zip_with(sub, cl, lambda a, b: (a - b) * (a - b))
-    return F.round(
-        F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x), 6
-    )
-
-
 def _books_lit(codebooks: list[list[list[float]]]) -> Column:
     return F.array(
         *[

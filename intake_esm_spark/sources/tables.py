@@ -15,19 +15,6 @@ import pyarrow.types as pat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 def _nano_ts_columns(path: str) -> list[str]:
     schema = pq.read_schema(path)
@@ -152,12 +139,3 @@ def ns_ts_to_timestamp(df: DataFrame, col: str) -> DataFrame:
         f"column {col!r} has type {dt.simpleString()}; expected a raw "
         "nanosecond long, TIMESTAMP_NTZ, or TIMESTAMP"
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names or TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    for n, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)

@@ -4,6 +4,7 @@ derived variables, serialize round-trip, and API surface parity checks."""
 
 import json
 import os
+import time
 
 import pandas as pd
 import pytest
@@ -99,6 +100,50 @@ def test_search_and_assemble(spark, catalog_env):
     assert [r[0] for r in ds.select("variable").distinct().collect()] == ["SHF"]
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted under a job group of its
+    own once the listener bus has recorded them."""
+    sc = spark.sparkContext
+    group = f"jobs-{time.perf_counter_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_group_summary_job_counts(spark, catalog_env, monkeypatch):
+    """One cached group summary answers len / keys / in / attrs_for: on a
+    fresh searched datastore len() then keys() costs no more jobs than
+    keys() alone, repeats cost none, and a second to_dataframe() on an
+    opened datastore re-runs no null profile."""
+    from intake_esm_spark.operators import grouping
+
+    cat = open_esm_datastore(catalog_env, spark=spark)
+    keys_alone = _jobs(spark, lambda: cat.search(experiment="CTRL").keys())
+    sub = cat.search(experiment="CTRL")
+    assert _jobs(spark, lambda: (len(sub), sub.keys())) <= keys_alone
+    key = sub.keys()[0]
+    assert _jobs(spark, lambda: (len(sub), sub.keys(), key in sub, sub.attrs_for(key))) == 0
+
+    profiles = []
+    null_profile = grouping.null_profile
+
+    def counted(df, columns):
+        profiles.append(columns)
+        return null_profile(df, columns)
+
+    monkeypatch.setattr(grouping, "null_profile", counted)
+    opened = open_esm_datastore(catalog_env, spark=spark)
+    first = _jobs(spark, opened.to_dataframe)
+    assert len(profiles) == 1
+    # the second call re-runs only the asset-path collect
+    assert _jobs(spark, opened.to_dataframe) < first
+    assert len(profiles) == 1
+
+
 def test_getitem_and_contains(spark, catalog_env):
     cat = open_esm_datastore(catalog_env, spark=spark)
     grp = cat["ocn.CTRL.pop.h"]
@@ -118,6 +163,47 @@ def test_to_datatree_keys(spark, catalog_env):
     cat = open_esm_datastore(catalog_env, spark=spark)
     dsets = cat.search(experiment="CTRL", variable="SHF").to_datatree()
     assert list(dsets) == ["ocn/CTRL/pop.h"]
+
+
+def test_summary_keys_match_key_column_for_typed_attrs(spark, tmp_path):
+    """keys() and to_datatree() join the summary's string-cast attr values
+    on the driver; for int, bool, double and string attrs that must equal
+    the Spark key column (concat_ws over cast(string)) behind keys_info(),
+    under the default '.' and to_datatree()'s '/'."""
+    from intake_esm_spark.operators import grouping
+    from intake_esm_spark.sources.descriptor import (
+        AggregationControl,
+        Assets,
+        ESMCatalogDescriptor,
+    )
+
+    rows = []
+    for n, flag, x, name in [
+        (7, True, 1.5, "a/b"),
+        (-3, False, 1e20, "c"),
+        (0, True, 0.1, "d.e"),
+    ]:
+        path = str(tmp_path / f"a{len(rows)}.parquet")
+        pd.DataFrame({"variable": ["v"], "value": [1.0]}).to_parquet(path)
+        rows.append((n, flag, x, name, path))
+    df = spark.createDataFrame(rows, "n int, flag boolean, x double, name string, path string")
+    desc = ESMCatalogDescriptor(
+        assets=Assets(column_name="path", format="parquet"),
+        aggregation_control=AggregationControl(
+            variable_column_name="variable",
+            groupby_attrs=["n", "flag", "x", "name"],
+        ),
+    )
+    store = ESMDataStore(spark, desc, df)
+    want = sorted(r["key"] for r in store.keys_info().collect())
+    assert store.keys() == want and len(want) == 3
+    # Spark's cast spells 1e20 as 1.0E20 (Python's str would give 1e+20)
+    assert any("1.0E20" in k for k in want)
+    want_tree = sorted(
+        r["key"] for r in grouping.group_keys(df, ["n", "flag", "x", "name"], "/").collect()
+    )
+    assert sorted(store.to_datatree()) == want_tree
+    assert all(k in store for k in want)
 
 
 def test_to_dask_single_group_guard(spark, catalog_env):
@@ -231,6 +317,11 @@ def test_empty_search_returns_empty_dict(spark, catalog_env):
     cat = open_esm_datastore(catalog_env, spark=spark)
     sub = cat.search(experiment="NOPE")
     assert sub.to_dataset_dict() == {}
+    # an empty selection's attrs are all all-null, so it groups by zero
+    # attrs — and groupBy() with zero attrs yields one row even on empty
+    # input; the summary must still report no groups
+    assert len(sub) == 0
+    assert sub.keys() == []
 
 
 def test_directory_layout_assets(spark, tmp_path):

@@ -137,10 +137,11 @@ def test_manifest_inside_tar_attaches_to_tar_url(spark, tmp_path):
 
 
 def test_keys_group_count_guard(spark, monkeypatch):
-    """keys()/to_dataset_dict() materialize one entry per dataset GROUP on
-    the driver (the reference's dict-of-datasets contract); a catalog with
-    pathological group cardinality must get a diagnostic steering to
-    keys_info(), not a driver OOM."""
+    """keys()/len()/to_dataset_dict() materialize one entry per dataset
+    GROUP on the driver (the reference's dict-of-datasets contract; len()
+    counts the same cached group summary); a catalog with pathological
+    group cardinality must get a diagnostic steering to keys_info(), not
+    a driver OOM."""
     import intake_esm_spark.datastore as ds_mod
     from intake_esm_spark.datastore import ESMDataStore
     from intake_esm_spark.sources.descriptor import Assets, ESMCatalogDescriptor
@@ -154,6 +155,8 @@ def test_keys_group_count_guard(spark, monkeypatch):
     store = ESMDataStore(spark, desc, cat_df)
     with pytest.raises(ValueError, match="keys_info"):
         store.keys()
+    with pytest.raises(ValueError, match="keys_info"):
+        len(store)
     # under the cap everything still works
     monkeypatch.setattr(ds_mod, "MAX_DATASET_KEYS", 5)
     store2 = ESMDataStore(spark, desc, cat_df)
