@@ -3,8 +3,7 @@
 ``_spread`` started as a private helper of ``dedup`` (r14's systemic
 single-file-scan fix) and was imported from there by eight other
 modules; promoted here (ADVICE r15) so generic partitioning utilities
-do not couple unrelated operators to the dedup module.  ``dedup``
-re-exports it for compatibility.
+do not couple unrelated operators to the dedup module.
 """
 
 from __future__ import annotations

@@ -169,56 +169,39 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 
 
 def _read_format(spark: SparkSession, fmt: str, fpaths: list[str]) -> DataFrame:
-    """One scan per format, each row tagged with its source asset path."""
-    tar_paths = [p for p in fpaths if asset_readers.is_tar_url(p)]
-    if tar_paths:
-        # tar members are driver-staged to local files (reference
-        # source.py:100 semantics), read in ONE scan per format, and each
-        # row is mapped back to its ORIGINAL tar:// URL (so the catalog
-        # attach matches the catalog entry) via a chained when() over
-        # input_file_name — not one scan+union per archive member
-        plain = [p for p in fpaths if not asset_readers.is_tar_url(p)]
-        staged = {t: asset_readers.stage_tar_url(t) for t in tar_paths}
-        if fmt == "reference":
-            # a manifest scan's input files are the REFERENCED members,
-            # never the staged manifest JSON, so the input_file_name
-            # mapping below can't ever match — tag each manifest's rows
-            # with its original tar:// URL directly (same per-manifest
-            # tagging as the non-tar reference branch)
-            tar_df = _union([
-                asset_readers.read_assets(spark, fmt, [local]).withColumn(
-                    "__asset_path", _norm(F.lit(orig))
-                )
-                for orig, local in staged.items()
-            ])
-        else:
-            tagged = None
-            for orig, local in staged.items():
-                cond = _norm(F.input_file_name()) == _norm(F.lit(local))
-                tag = _norm(F.lit(orig))
-                tagged = F.when(cond, tag) if tagged is None else tagged.when(cond, tag)
-            # fallback keeps the physical path: in strict mode an unmapped
-            # file then fails the attach LOUDLY instead of matching nothing
-            tagged = tagged.otherwise(_norm(F.input_file_name()))
-            tar_df = asset_readers.read_assets(
-                spark, fmt, list(staged.values())
-            ).withColumn("__asset_path", tagged)
-        if not plain:
-            return tar_df
-        return _union([_read_format(spark, fmt, plain), tar_df])
+    """One scan per format, each row tagged with its source asset path.
+
+    ``tar://`` members are driver-staged to local files first (reference
+    source.py:100 semantics) and read in the same scan as the plain
+    paths; a staged row's tag maps back to its ORIGINAL tar:// URL so the
+    catalog attach matches the catalog entry. An unmapped path keeps its
+    physical form: in strict mode it then fails the attach LOUDLY instead
+    of matching nothing."""
+    local = {
+        p: asset_readers.stage_tar_url(p) if asset_readers.is_tar_url(p) else p
+        for p in fpaths
+    }
     if fmt == "reference":
-        # manifest source: tag member rows with the MANIFEST path (the
-        # catalog row points at the manifest, not the member files)
+        # a manifest scan's input files are the REFERENCED members, so tag
+        # each manifest's rows with its catalog path directly
         return _union([
             asset_readers.read_assets(spark, fmt, [m]).withColumn(
-                "__asset_path", _norm(F.lit(m))
+                "__asset_path", _norm(F.lit(orig))
             )
-            for m in fpaths
+            for orig, m in local.items()
         ])
-    df = asset_readers.read_assets(spark, fmt, fpaths)
-    if "__asset_path" in df.columns:  # reader-provided (e.g. netcdf ingest)
-        return df.withColumn("__asset_path", _norm(F.col("__asset_path")))
-    return df.withColumn("__asset_path", _norm(F.input_file_name()))
+    df = asset_readers.read_assets(spark, fmt, list(local.values()))
+    # reader-provided tags (e.g. netcdf ingest) win: input_file_name() is
+    # empty for rows a reader builds itself
+    if "__asset_path" in df.columns:
+        tag = _norm(F.col("__asset_path"))
+    else:
+        tag = _norm(F.input_file_name())
+    staged = [(_norm(F.lit(m)), _norm(F.lit(p))) for p, m in local.items() if m != p]
+    if staged:
+        to_url = F.create_map(*[c for kv in staged for c in kv])
+        tag = F.coalesce(to_url[tag], tag)
+    return df.withColumn("__asset_path", tag)
 
 
 def open_asset_union(

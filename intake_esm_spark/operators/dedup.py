@@ -40,7 +40,7 @@ from intake_esm_spark.functions.text import (
     words_array,
 )
 
-from ._util import _spread  # noqa: F401  (re-export; moved r15)
+from ._util import _spread
 
 _log = logging.getLogger(__name__)
 
@@ -115,11 +115,6 @@ def _shingle_rows(
     return proj.select("id", F.explode("__sh_arr").alias("sh"))
 
 
-# _spread lives in ._util since r15 (ADVICE: promoted from here once 8+
-# modules imported it); re-exported for compatibility with existing
-# importers and tests.
-
-
 def exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -152,10 +147,23 @@ def dedup_exact(
     so the whole body re-shuffled on doc_id. min_by folds the selection into
     the one shuffle the dedup fundamentally needs.) Ties cannot occur: ids
     are unique, so min_by is deterministic."""
-    cols = df.columns
+    return _min_id_survivors(_fp_rows(df, text_col), id_col)
+
+
+def _fp_rows(df: DataFrame, text_col: str) -> DataFrame:
+    """``(__row, __fp)``: each row as one struct beside its normalized-text
+    fingerprint — the input of :func:`_min_id_survivors`."""
+    return df.select(
+        F.struct(*df.columns).alias("__row"),
+        fingerprint_md5(F.col(text_col)).alias("__fp"),
+    )
+
+
+def _min_id_survivors(rows: DataFrame, id_col: str) -> DataFrame:
+    """The exact-dedup survivor rule: per ``__fp``, the ``__row`` with the
+    min ``id_col``, selected inside the one fingerprint-keyed aggregation."""
     return (
-        df.select(F.struct(*cols).alias("__row"), fingerprint_md5(F.col(text_col)).alias("__fp"))
-        .groupBy("__fp")
+        rows.groupBy("__fp")
         .agg(F.min_by(F.col("__row"), F.col(f"__row.{id_col}")).alias("__row"))
         .select("__row.*")
     )
@@ -188,22 +196,23 @@ def minhash_lsh_candidates(
     banded = _banded_from_hashed(hashed, num_hashes, bands).localCheckpoint(
         eager=False
     )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-        )
+    return (
+        _band_collisions(banded, banded, F.col("l.id") < F.col("r.id"))
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .distinct()
     )
-    return pairs
+
+
+def _band_collisions(left: DataFrame, right: DataFrame, ids: Column) -> DataFrame:
+    """The LSH band join: rows of two banded ``(id, band, band_hash)``
+    frames, aliased ``l`` and ``r``, that share a band hash and satisfy
+    the caller's id predicate ``ids``. Callers project and ``distinct``."""
+    return left.alias("l").join(
+        right.alias("r"),
+        (F.col("l.band") == F.col("r.band"))
+        & (F.col("l.band_hash") == F.col("r.band_hash"))
+        & ids,
+    )
 
 
 LSH_HASH_SCHEME = "md5-60-affine-v1"
@@ -268,10 +277,13 @@ def _df_capped(exploded: DataFrame, shingle_col: str, max_doc_freq: int) -> Data
 def _capped_pairs(
     kept: DataFrame, threshold: float, score: str = "jaccard"
 ) -> DataFrame:
-    """Pair computation over ALREADY df-capped (id, shingle) rows — the
-    ONE canonical pair plan (jaccard_pairs and containment_pairs both
-    delegate here; cap semantics / join shape / id tiebreak have a
-    single definition to keep in sync with the SQL oracles).
+    """Pair computation over (id, shingle) rows — the ONE canonical pair
+    plan (jaccard_pairs' capped path, containment_pairs and
+    near_duplicates all delegate here; join shape / id tiebreak have a
+    single definition to keep in sync with the SQL oracles). The rows
+    arrive df-capped or not as the caller decides (``max_doc_freq=None``
+    passes them uncapped), and the caller decides whether to pin them:
+    near_duplicates pins its candidate-doc rows, the others do not.
 
     Per-doc sizes are a narrow (id, count) aggregate with map-side
     partials, joined back onto the pair aggregate (the same shape as the
@@ -280,11 +292,11 @@ def _capped_pairs(
     ``jaccard`` returns (id_a, id_b, jaccard); ``containment`` thresholds
     n_inter/min(n_a, n_b) and returns jaccard alongside.
 
-    NOT pinned (r14, measured): all three consumers (both self-join
-    sides and the sizes aggregate) reference the identical cap-window
-    subtree, and runtime exchange reuse already dedups it — an explicit
-    localCheckpoint added a materialization pass and was 15% SLOWER at
-    bench scale (paired A/B)."""
+    Not pinned here (r14, measured): over the all-docs cap-window rows,
+    all three consumers (both self-join sides and the sizes aggregate)
+    reference the identical subtree, and runtime exchange reuse already
+    dedups it — an explicit localCheckpoint added a materialization pass
+    and was 15% SLOWER at bench scale (paired A/B)."""
     sizes = kept.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = kept.alias("a"), kept.alias("b")
     inter = (
@@ -472,14 +484,8 @@ def near_duplicates(
     banded = _banded_from_hashed(hashed, num_hashes, bands).localCheckpoint(
         eager=False
     )
-    l, r = banded.alias("l"), banded.alias("r")
     cand_ids = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
+        _band_collisions(banded, banded, F.col("l.id") < F.col("r.id"))
         .select(F.explode(F.array(F.col("l.id"), F.col("r.id"))).alias("id"))
         .distinct()
     )
@@ -490,32 +496,8 @@ def near_duplicates(
         # aggregate; candidate-doc-bounded, so the pin is small
         .localCheckpoint(eager=False)
     )
-    # verify over the SAME (already df-capped) shingle sets; per-doc sizes
-    # are a narrow aggregate over candidate docs only
-    sizes = exploded.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = exploded.alias("a"), exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .join(
-            sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")),
-            on="id_a",
-        )
-        .join(
-            sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")),
-            on="id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    # verify over the SAME (df-capped when capped) shingle sets
+    return _capped_pairs(exploded, threshold)
 
 
 def history_fingerprints(history_df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -546,16 +528,9 @@ def dedup_exact_incremental(
     within-batch pass is the same single-exchange ``min_by`` aggregation
     as :func:`dedup_exact`."""
     hist_fp = history_fingerprints(history_df, text_col)
-    cols = new_df.columns
-    batch = _spread(new_df).select(
-        F.struct(*cols).alias("__row"), fingerprint_md5(F.col(text_col)).alias("__fp")
-    )
+    batch = _fp_rows(_spread(new_df), text_col)
     fresh = batch.join(hist_fp, on="__fp", how="left_anti")
-    return (
-        fresh.groupBy("__fp")
-        .agg(F.min_by(F.col("__row"), F.col(f"__row.{id_col}")).alias("__row"))
-        .select("__row.*")
-    )
+    return _min_id_survivors(fresh, id_col)
 
 
 def _banded_from_hashed(
@@ -716,14 +691,8 @@ def near_duplicates_incremental(
     ).localCheckpoint()
     idx = spark.read.parquet(f"{index_path}/bands")
     all_banded = idx.unionByName(batch_banded)
-    l, r = all_banded.alias("l"), batch_banded.alias("r")
     cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") != F.col("r.id")),
-        )
+        _band_collisions(all_banded, batch_banded, F.col("l.id") != F.col("r.id"))
         .select(
             F.least("l.id", "r.id").alias("id_a"),
             F.greatest("l.id", "r.id").alias("id_b"),

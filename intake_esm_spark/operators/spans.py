@@ -18,7 +18,9 @@ has no dedup at all; extension per SURVEY §2.9):
    (``functions.text.rolling_hashes`` — the same shingle machinery the
    MinHash family uses, so window ``i`` is exactly the word n-gram
    starting at token ``i``);
-2. count each window hash's distinct-document frequency corpus-wide;
+2. count each window hash's distinct-document frequency corpus-wide
+   (:func:`duplicated_window_hashes` — the one report every removal
+   path reads, inline or from a snapshot);
 3. a MAXIMAL RUN of >= ``min_run`` consecutive duplicated windows in a
    document marks a verbatim span (a span of L shared tokens yields
    L - n + 1 consecutive duplicated windows, so ``min_run = K`` detects
@@ -70,27 +72,33 @@ from pyspark.sql import functions as F
 from intake_esm_spark.functions.text import rolling_hashes, words_array
 
 
+def _inline_report(
+    df: DataFrame, id_col: str, text_col: str, n: int, min_doc_freq: int
+) -> DataFrame:
+    """The thresholded :func:`duplicated_window_hashes` report of ``df``
+    itself — the duplicated-window vocabulary of the inline operators."""
+    if min_doc_freq < 2:
+        raise ValueError(
+            f"min_doc_freq must be >= 2 (1 would mark every window), got {min_doc_freq}"
+        )
+    return duplicated_window_hashes(df, id_col, text_col, n, min_doc_freq)
+
+
 def _window_runs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int,
-    min_doc_freq: int,
     min_run: int,
-    dup_vocab: DataFrame | None = None,
+    report: DataFrame,
 ) -> DataFrame:
     """Maximal runs of consecutive duplicated windows per document:
     ``(id_col, __s, __e_tok, n_windows)`` with ``__s`` the run's first
     token index and ``__e_tok`` its last covered token index (both
-    0-based, in the normalized word array). ``dup_vocab`` (single-column
-    frame of duplicated window hashes) skips the corpus frequency pass —
-    the precomputed-report path."""
+    0-based, in the normalized word array). A window is duplicated when
+    its hash is in the first column of ``report``."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    if min_doc_freq < 2:
-        raise ValueError(
-            f"min_doc_freq must be >= 2 (1 would mark every window), got {min_doc_freq}"
-        )
     if min_run < 1:
         raise ValueError(f"min_run must be >= 1, got {min_run}")
 
@@ -98,14 +106,8 @@ def _window_runs(
         F.col(id_col),
         F.posexplode(rolling_hashes(F.col(text_col), n)).alias("__wpos", "__h"),
     )
-    if dup_vocab is None:
-        dup_vocab = (
-            wins.groupBy("__h")
-            .agg(F.countDistinct(id_col).alias("__df"))
-            .filter(F.col("__df") >= min_doc_freq)
-            .select("__h")
-        )
-    dup = wins.join(dup_vocab, "__h", "left_semi")
+    vocab = report.select(F.col(report.columns[0]).alias("__h"))
+    dup = wins.join(vocab, "__h", "left_semi")
 
     # gaps-and-islands: consecutive window positions share (wpos - rank)
     w = Window.partitionBy(id_col).orderBy("__wpos")
@@ -126,8 +128,8 @@ def _cut_runs(df: DataFrame, runs: DataFrame, id_col: str, text_col: str) -> Dat
     """Shared reassembly for span_dedup / span_dedup_against: collect a
     doc's run intervals, index the token array once, cut every covered
     token in one in-row pass (O(tokens x runs), runs small), and emit
-    the rewritten text + diagnostics. ONE definition so the inline and
-    against-snapshot paths (whose equality tests assert) cannot drift."""
+    the rewritten text + diagnostics. ONE definition for the inline and
+    against-snapshot paths."""
     spans = runs.groupBy(id_col).agg(
         F.collect_list(
             F.struct(F.col("__s").alias("s"), F.col("__e_tok").alias("e"))
@@ -177,8 +179,13 @@ def span_dedup(
     ``keep="none"`` rule): window frequency is corpus-global, so there
     is no cheap "first holder" at span grain — run document-level dedup
     first if one canonical copy must survive.
+
+    This IS report-then-remove: the duplicated windows are those of
+    :func:`duplicated_window_hashes` at ``min_doc_freq``, and the runs and
+    token cutting are :func:`span_dedup_against`'s.
     """
-    runs = _window_runs(df, id_col, text_col, n, min_doc_freq, min_run)
+    report = _inline_report(df, id_col, text_col, n, min_doc_freq)
+    runs = _window_runs(df, id_col, text_col, n, min_run, report)
     return _cut_runs(df, runs, id_col, text_col)
 
 
@@ -196,8 +203,9 @@ def duplicated_spans(
     the covered text — what a curation run reads to choose ``min_run``
     (what IS getting cut, and how long it is). Aggregate it by ``span``
     (or ``md5(span)`` at scale) for the corpus-wide top duplicated
-    spans."""
-    runs = _window_runs(df, id_col, text_col, n, min_doc_freq, min_run)
+    spans. The duplicated windows are :func:`span_dedup`'s."""
+    report = _inline_report(df, id_col, text_col, n, min_doc_freq)
+    runs = _window_runs(df, id_col, text_col, n, min_run, report)
     toks = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), words_array(F.col(text_col)).alias("__toks")
     )
@@ -293,15 +301,12 @@ def span_dedup_against(
     gets would be silently empty; there is no sidecar to check against,
     so the contract is documented, not enforced).
 
-    ``span_dedup(df, n, mdf, mr)`` ≡ ``span_dedup_against(df,
-    duplicated_window_hashes(df, n=n, min_doc_freq=mdf), n=n,
-    min_run=mr)`` — asserted in tests."""
+    ``span_dedup(df, n, mdf, mr)`` is this function over
+    ``duplicated_window_hashes(df, n=n, min_doc_freq=mdf)``."""
     vocab = report.select(F.col(report.columns[0]).alias("__h")).dropDuplicates(
         ["__h"]
     )
-    runs = _window_runs(
-        df, id_col, text_col, n, min_doc_freq=2, min_run=min_run, dup_vocab=vocab
-    )
+    runs = _window_runs(df, id_col, text_col, n, min_run, vocab)
     return _cut_runs(df, runs, id_col, text_col)
 
 

@@ -42,11 +42,12 @@ driver collect:
 1. the document-frequency aggregation, keyed by the 32-hex md5
    fingerprint (map-side partial aggregation applies — the per-partition
    distinct-(fp, doc) collapse happens before the shuffle);
-2. the frequency join back onto the exploded lines, keyed by the same
-   fingerprint (the frequency side is line-vocabulary-sized — often
-   broadcastable in practice, but boilerplate vocabularies are corpus-
-   sized in the worst case, so the plan stays a shuffle join and lets AQE
-   downgrade it to broadcast when the stats allow);
+2. the join of the exploded lines against the thresholded frequency
+   report, keyed by the same fingerprint (the report is
+   line-vocabulary-sized — often broadcastable in practice, but
+   boilerplate vocabularies are corpus-sized in the worst case, so the
+   plan stays a shuffle join and lets AQE downgrade it to broadcast when
+   the stats allow);
 3. the per-document reassembly groupBy, keyed by document id.
 
 Removal happens INSIDE the reassembly aggregate (``collect_list`` skips
@@ -76,7 +77,9 @@ def line_dedup(
     lines: Column | None = None,
 ) -> DataFrame:
     """Remove lines duplicated across >= ``min_doc_freq`` documents and
-    reassemble the documents (see module docstring for semantics).
+    reassemble the documents (see module docstring for semantics). This
+    IS report-then-remove: :func:`line_dedup_against` over
+    :func:`duplicated_lines` of the same frame.
 
     Parameters
     ----------
@@ -103,45 +106,22 @@ def line_dedup(
     with null ``text_col`` (null segmentation) are dropped, matching
     SQL ``unnest`` semantics.
     """
-    if keep not in ("none", "first"):
-        raise ValueError(f"keep must be 'none' or 'first', got {keep!r}")
     if min_doc_freq < 2:
         raise ValueError(
             f"min_doc_freq must be >= 2 (1 would remove every line), got {min_doc_freq}"
         )
-    arr = lines if lines is not None else F.split(F.col(text_col), sep)
-    exploded = df.select(
-        F.col(id_col), F.posexplode(arr).alias("__pos", "__line")
+    report = duplicated_lines(
+        df, text_col, id_col, min_doc_freq, sep=sep, normalize=normalize, lines=lines
     )
-    fp_src = (
-        normalized_text(F.col("__line")) if normalize else F.col("__line")
+    return line_dedup_against(
+        df, report, text_col, id_col, keep=keep, sep=sep, join_sep=join_sep,
+        normalize=normalize, lines=lines,
     )
-    line_rows = exploded.withColumn("__fp", F.md5(fp_src))
 
-    freq = line_rows.groupBy("__fp").agg(
-        F.countDistinct(id_col).alias("__df"),
-        F.min(id_col).alias("__keeper"),
-    )
-    joined = line_rows.join(freq, "__fp")
 
-    keep_line = F.col("__df") < F.lit(min_doc_freq)
-    if keep == "first":
-        keep_line = keep_line | (F.col(id_col) == F.col("__keeper"))
-
-    # removal inside the aggregate: when() without otherwise() yields null
-    # for removed lines and collect_list skips nulls, so a document whose
-    # every line is boilerplate still emits a row (text = "", n_kept = 0)
-    picked = F.when(keep_line, F.struct(F.col("__pos"), F.col("__line")))
-    return joined.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(picked)), lambda s: s["__line"]
-            ),
-            join_sep,
-        ).alias(text_col),
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(keep_line.cast("bigint")).alias("n_kept"),
-    )
+def _line_fp(normalize: bool) -> Column:
+    """The line fingerprint: md5 of the (CCNet-normalized) ``__line``."""
+    return F.md5(normalized_text(F.col("__line")) if normalize else F.col("__line"))
 
 
 def line_dedup_against(
@@ -162,27 +142,23 @@ def line_dedup_against(
     ``first_doc`` holder's copy), documents reassembled as in
     :func:`line_dedup`.
 
-    The scan-count lever at 100 TB: :func:`line_dedup` must read and
-    shingle the corpus TWICE (the frequency branch and the join branch —
-    column pruning makes them non-identical, so exchange reuse cannot
-    merge them). With the report materialized once (it is
+    The scan-count lever at 100 TB: :func:`line_dedup` is this function
+    over an inline ``duplicated_lines(df, min_doc_freq=...)``, so it
+    reads and segments the corpus TWICE (the report branch and the join
+    branch — column pruning makes them non-identical, so exchange reuse
+    cannot merge them). With the report materialized once (it is
     line-vocabulary-sized, and production reuses it across batches and
     feeds the same snapshot to ``streaming.stateful.stream_line_filter``),
-    this variant is ONE corpus scan + one join against the small report +
-    the reassembly. ``line_dedup(df, ...)`` ≡
-    ``line_dedup_against(df, duplicated_lines(df, min_doc_freq=...), ...)``
-    (asserted in tests). Note the report's ``min_doc_freq`` plays the
-    threshold role here — this function removes every reported line."""
+    this is ONE corpus scan + one join against the small report + the
+    reassembly. Note the report's ``min_doc_freq`` plays the threshold
+    role here — this function removes every reported line."""
     if keep not in ("none", "first"):
         raise ValueError(f"keep must be 'none' or 'first', got {keep!r}")
     arr = lines if lines is not None else F.split(F.col(text_col), sep)
     exploded = df.select(
         F.col(id_col), F.posexplode(arr).alias("__pos", "__line")
     )
-    fp_src = (
-        normalized_text(F.col("__line")) if normalize else F.col("__line")
-    )
-    line_rows = exploded.withColumn("__fp", F.md5(fp_src))
+    line_rows = exploded.withColumn("__fp", _line_fp(normalize))
     # the contract says "any frame with fingerprint + first_doc columns",
     # so defend against duplicate fingerprint rows (each would duplicate
     # every matching line in the reassembly and inflate n_lines/n_kept);
@@ -203,6 +179,9 @@ def line_dedup_against(
     keep_line = F.col("__hit").isNull()
     if keep == "first":
         keep_line = keep_line | (F.col(id_col) == F.col("__keeper"))
+    # removal inside the aggregate: when() without otherwise() yields null
+    # for removed lines and collect_list skips nulls, so a document whose
+    # every line is boilerplate still emits a row (text = "", n_kept = 0)
     picked = F.when(keep_line, F.struct(F.col("__pos"), F.col("__line")))
     return joined.groupBy(id_col).agg(
         F.array_join(
@@ -276,11 +255,8 @@ def duplicated_lines(
     exploded = df.select(
         F.col(id_col), F.explode(arr).alias("__line")
     )
-    fp_src = (
-        normalized_text(F.col("__line")) if normalize else F.col("__line")
-    )
     return (
-        exploded.withColumn("fingerprint", F.md5(fp_src))
+        exploded.withColumn("fingerprint", _line_fp(normalize))
         .groupBy("fingerprint")
         .agg(
             F.min("__line").alias("line"),

@@ -128,7 +128,9 @@ def test_doc_freq_cap_bounds_join_input(spark):
 def test_default_cap_lossless_on_testdata(spark):
     """At the default cap the capped and strict (max_doc_freq=None) plans
     agree pair-for-pair and value-for-value on the synthetic documents
-    table — the cap only engages on adversarial boilerplate."""
+    table — the cap only engages on adversarial boilerplate. The fused
+    near_duplicates pipeline, run uncapped (its verify then sees uncapped
+    rows), finds the same pairs with the same values."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     capped = {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
@@ -140,7 +142,15 @@ def test_default_cap_lossless_on_testdata(spark):
             docs, shingle_n=5, threshold=0.8, max_doc_freq=None
         ).collect()
     }
+    fused_uncapped = {
+        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+        for r in dedup.near_duplicates(
+            docs, shingle_n=5, threshold=0.8, max_doc_freq=None
+        ).collect()
+    }
+    assert strict  # a vacuous comparison would pass on any code
     assert capped == strict
+    assert fused_uncapped == strict
 
 
 def test_dedup_exact_incremental(spark):

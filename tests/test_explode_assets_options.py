@@ -136,6 +136,45 @@ def test_manifest_inside_tar_attaches_to_tar_url(spark, tmp_path):
     ]
 
 
+def test_self_tagging_reader_inside_tar_attaches_to_tar_url(
+    spark, tmp_path, monkeypatch
+):
+    """A reader that tags its own rows with ``__asset_path`` (the netcdf /
+    zarr kernel) gives rows with an empty input_file_name(); a tar://
+    asset read through it must still attach to its catalog entry, both
+    beside a plain asset in the same scan and on its own."""
+    import tarfile
+
+    from intake_esm_spark.datastore import ESMDataStore
+    from intake_esm_spark.sources.descriptor import Assets, ESMCatalogDescriptor
+
+    def fake_netcdf(spark, paths):
+        return spark.createDataFrame(
+            [(f"v{i}", float(i), p) for i, p in enumerate(paths)],
+            "variable string, value double, __asset_path string",
+        )
+
+    monkeypatch.setitem(asset_readers.READERS, "netcdf", fake_netcdf)
+    inner = tmp_path / "a.nc"
+    inner.write_bytes(b"not really netcdf")
+    archive = tmp_path / "assets.tar"
+    with tarfile.open(archive, "w") as tf:
+        tf.add(str(inner), arcname="a.nc")
+    tar_url = f"tar://a.nc::{archive}"
+    plain = str(tmp_path / "b.nc")
+
+    desc = ESMCatalogDescriptor(assets=Assets(column_name="path", format="netcdf"))
+    cat_df = spark.createDataFrame(
+        [("expA", 7, tar_url), ("expA", 8, plain)],
+        ["experiment", "member_id", "path"],
+    )
+    rows = ESMDataStore(spark, desc, cat_df).to_dataframe().collect()
+    assert sorted(r["member_id"] for r in rows) == [7, 8]
+    only_tar = cat_df.filter(F.col("member_id") == 7)
+    rows = ESMDataStore(spark, desc, only_tar).to_dataframe().collect()
+    assert [(r["variable"], r["member_id"]) for r in rows] == [("v0", 7)]
+
+
 def test_keys_group_count_guard(spark, monkeypatch):
     """keys()/len()/to_dataset_dict() materialize one entry per dataset
     GROUP on the driver (the reference's dict-of-datasets contract; len()
