@@ -264,10 +264,15 @@ class ESMDataStore:
         """Multi-column predicate search + optional relational division +
         derived-variable dependency expansion. Returns a new datastore over
         the filtered (still lazy) DataFrame."""
-        q = Query.normalize(query, self._df.columns, require_all_on)
-        results = base_search(self._df, q)
-        if q.require_all_on and q.query:
-            results = apply_require_all_on(results, q, self.iterable_columns)
+
+        def select(terms: dict[str, Any]) -> DataFrame:
+            q = Query.normalize(terms, self._df.columns, require_all_on)
+            rows = base_search(self._df, q)
+            if q.require_all_on and q.query:
+                rows = apply_require_all_on(rows, q, self.iterable_columns)
+            return rows
+
+        results = select(query)
 
         # derived-variable expansion (reference core.py:464-493)
         var_col = self.descriptor.variable_column_name
@@ -280,12 +285,7 @@ class ESMDataStore:
             rest = {k: v for k, v in query.items() if k != var_col}
             for name, dv in self.derivedcat.items():
                 if name in variables:
-                    dep_query = {**dv.query, **rest}
-                    dq = Query.normalize(dep_query, self._df.columns, require_all_on)
-                    res = base_search(self._df, dq)
-                    if dq.require_all_on and dq.query:
-                        res = apply_require_all_on(res, dq, self.iterable_columns)
-                    results = results.unionByName(res)
+                    results = results.unionByName(select({**dv.query, **rest}))
                     dependents.extend(dv.dependent_variables(var_col))
                     derived_subset[name] = dv
             if derived_subset:

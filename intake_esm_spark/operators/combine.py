@@ -18,7 +18,9 @@ selected group — Spark schedules a task per file split, which *is* the
 reference's per-asset parallelism, minus the driver-side pool — then one
 BROADCAST join against the (metadata-scale) catalog to attach group
 attributes. No shuffle of asset data at all; at 100 TB the only data
-movement is the scan itself.
+movement is the scan itself. The scan targets are the exact asset paths
+from one bounded collect, or, above ``MAX_DRIVER_PATHS``, the per-format
+parent directories from one more (:func:`_scan_plan`).
 
 Format dispatch (reference source.py:87-100): the descriptor's
 ``assets.format`` (uniform) or ``assets.format_column_name`` (per-row)
@@ -109,8 +111,9 @@ def _scan_plan(
       and let the broadcast catalog join PRUNE rows of files the catalog
       doesn't reference (a directory may legitimately hold non-catalog
       files, so unmatched rows are dropped, not an error). ``reference``
-      manifests are exempt: each manifest is driver-parsed metadata, so
-      their exact paths are always collected.
+      manifests and ``tar://`` URLs are exempt: each is driver-parsed
+      metadata, so its exact path is the target. One collect after the
+      head probe returns every (target, format) pair.
 
     Directory mode requires each directory to be format-homogeneous —
     reading one directory under two readers would double-scan it; that
@@ -137,30 +140,22 @@ def _scan_plan(
     # directory mode — per-asset paths stay on the executors. Manifests
     # and tar:// chain URLs are exempt (both are driver-parsed metadata;
     # a dirname of a tar URL is meaningless), so their exact paths are
-    # always collected.
+    # the targets.
     exempt = (F.col("__f") == "reference") | F.col("__p").startswith("tar://")
-    manifests = pf.filter(exempt).collect()
-    dirs = (
-        pf.filter(~exempt)
-        .select(
-            F.regexp_replace("__p", r"/[^/]*$", "").alias("__d"), "__f"
-        )
-        .distinct()
-        .collect()
-    )
+    parent = F.regexp_replace("__p", r"/[^/]*$", "")
+    targets = pf.select(
+        F.when(exempt, F.col("__p")).otherwise(parent).alias("__t"), "__f"
+    ).distinct()
     seen: dict[str, str] = {}
-    for r in dirs:
-        if r["__d"] in seen and seen[r["__d"]] != r["__f"]:
+    for t, f in targets.collect():
+        if seen.setdefault(t, f) != f:
             raise ESMDataSourceError(
-                f"directory {r['__d']!r} holds assets of multiple formats "
-                f"({seen[r['__d']]!r} and {r['__f']!r}); directory-mode "
-                "scanning needs format-homogeneous directories — split "
-                "the formats into separate directories"
+                f"directory {t!r} holds assets of multiple formats "
+                f"({seen[t]!r} and {f!r}); directory-mode scanning needs "
+                "format-homogeneous directories — split the formats into "
+                "separate directories"
             )
-        seen[r["__d"]] = r["__f"]
-        by_fmt.setdefault(r["__f"], []).append(r["__d"])
-    for r in manifests:
-        by_fmt.setdefault(r["__f"], []).append(r["__p"])
+        by_fmt.setdefault(f, []).append(t)
     return by_fmt, False
 
 

@@ -39,6 +39,7 @@ from intake_esm_spark.functions.text import (
     shingles_of_words,
     words_array,
 )
+from intake_esm_spark.util import read_text_sidecar, write_text_sidecar
 
 from ._util import _spread
 
@@ -618,7 +619,6 @@ def write_lsh_index(
 
     banded = _banded_rows(docs, text_col, id_col, num_hashes, bands, shingle_n)
     banded.write.mode("overwrite").parquet(f"{path}/bands")
-    from intake_esm_spark.util import write_text_sidecar
 
     sidecar = _json.dumps(
         {
@@ -655,9 +655,7 @@ def near_duplicates_incremental(
     verification bounds the join instead)."""
     import json as _json
 
-    params = _json.loads(
-        spark.read.text(f"{index_path}/_lsh_params").collect()[0][0]
-    )
+    params = _json.loads(read_text_sidecar(spark, f"{index_path}/_lsh_params"))
     scheme = params.get("hash_scheme")
     if scheme != LSH_HASH_SCHEME:
         # an index signatured under a different hash family band-joins to

@@ -16,10 +16,13 @@ Reference semantics (/root/reference/intake_esm/_search.py:61-99):
 Spark plan (no driver-side loops — scales to any number of groups):
 
     explode iterable key cols -> project (rao_cols + keys) -> filter to
-    tuples ∈ condition -> groupBy(rao_cols).agg(countDistinct(keys)) ->
+    tuples ∈ condition -> groupBy(rao_cols).agg(size(collect_set(keys))) ->
     keep count == |condition| -> LEFT SEMI join back on rao_cols
 
-The kept-groups side is tiny (distinct group keys), so Catalyst broadcasts
+A group's distinct tuples are counted as the size of one set (the idiom
+of ``grouping.nunique``), which aggregates under the groupBy's own
+exchange; a ``countDistinct`` would add a second hash exchange. The
+kept-groups side is tiny (distinct group keys), so Catalyst broadcasts
 the semi-join; the only shuffle is the groupBy on the division keys.
 """
 
@@ -56,7 +59,7 @@ def apply_require_all_on(
 
     # dedup combinations exactly like the reference's set() (_search.py:90)
     # — duplicate query values must not inflate the required distinct
-    # count (countDistinct could never reach it and every group would be
+    # count (the tuple count could never reach it and every group would be
     # dropped); dict.fromkeys keeps a deterministic order
     condition = list(
         dict.fromkeys(itertools.product(*[tuple(v) for v in sub_query.values()]))
@@ -82,7 +85,7 @@ def apply_require_all_on(
         exploded.select(*rao, *keys)
         .filter(in_condition)
         .groupBy(*rao)
-        .agg(F.countDistinct(F.struct(*keys)).alias("_n_combos"))
+        .agg(F.size(F.collect_set(F.struct(*keys))).alias("_n_combos"))
         .filter(F.col("_n_combos") == len(condition))
         .select(*rao)
     )

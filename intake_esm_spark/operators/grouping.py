@@ -9,20 +9,23 @@ Reference semantics (/root/reference/intake_esm/cat.py):
   attrs equal the full column set, grouping falls back to ALL columns
 * the public dataset key is the group values joined with ``sep``
   (default '.') — cat.py:378-385
-* ``unique()``: distinct non-null values per column; iterable columns are
-  flattened first (cat.py:387-402)
+* ``unique()``: distinct non-NA values per column (NaN is NA); iterable
+  columns are flattened first (cat.py:387-402)
 * ``nunique()``: distinct counts per column, iterable columns exploded
   (cat.py:404-407, 570-579)
 
 All of these are single-pass Spark aggregations — the null-profile
 pre-pass is ONE ``agg`` over every attr (not a scan per column),
 ``group_summary`` is one grouped aggregate per datastore, and
-unique/nunique likewise aggregate all columns in one job each.
+unique/nunique likewise aggregate all columns in one job each. A
+column's distinct values have ONE definition, :func:`_value_set`:
+``unique`` collects the sets and exact ``nunique`` their sizes, so the
+two always agree.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,10 +112,7 @@ def group_summary(
     plan."""
     aggs = [F.max(F.lit(1)).alias("__n")]
     if with_variables is not None:
-        values = F.collect_set(F.col(with_variables))
-        if _is_array(df.schema[with_variables].dataType):
-            values = F.array_distinct(F.array_compact(F.flatten(values)))
-        aggs.append(values.alias("__vars"))
+        aggs.append(_value_set(df, with_variables).alias("__vars"))
     return (
         df.groupBy(*attrs)
         .agg(*aggs)
@@ -126,31 +126,36 @@ def _is_array(dtype: T.DataType) -> bool:
     return isinstance(dtype, T.ArrayType)
 
 
-def unique(df: DataFrame, columns: list[str] | None = None) -> dict[str, list]:
-    """Distinct non-null values per column; iterable columns flattened.
+def _value(df: DataFrame, c: str) -> Column:
+    """Column ``c`` with NaN as null: the reference's dropna treats NaN as
+    NA (cat.py:387-407)."""
+    dtype = df.schema[c].dataType
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return F.nanvl(F.col(c), F.lit(None).cast(dtype))
+    return F.col(c)
 
-    One aggregation job: ``collect_set`` per scalar column and
-    ``collect_set`` over a ``flatten``ed array column — Spark's map-side
-    partial aggregation keeps the shuffle tiny regardless of row count.
-    """
+
+def _value_set(df: DataFrame, c: str) -> Column:
+    """Column ``c``'s distinct non-NA values as ONE Spark set — the single
+    definition behind :func:`unique` (the set), exact :func:`nunique` (its
+    ``size``) and :func:`group_summary`'s ``__vars``. ``collect_set``
+    skips nulls; an array column's per-row sets are flattened and its
+    inner nulls compacted away."""
+    values = F.collect_set(_value(df, c))
+    if _is_array(df.schema[c].dataType):
+        return F.array_distinct(F.array_compact(F.flatten(values)))
+    return values
+
+
+def unique(df: DataFrame, columns: list[str] | None = None) -> dict[str, list]:
+    """Distinct non-NA values per column; iterable columns flattened.
+
+    One aggregation job over every column's :func:`_value_set` — Spark's
+    map-side partial aggregation keeps the shuffle tiny regardless of row
+    count; each column's set is merged in one task."""
     columns = columns or df.columns
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    aggs = []
-    for c in columns:
-        if _is_array(dtypes[c]):
-            # flatten the per-row arrays then distinct the elements
-            aggs.append(
-                F.array_distinct(F.flatten(F.collect_set(F.col(c)))).alias(c)
-            )
-        else:
-            aggs.append(F.collect_set(F.col(c)).alias(c))
-    row = df.agg(*aggs).collect()[0]
-    # inner nulls survive array flatten; the reference drops NA values
-    # before uniquing (cat.py:387-402)
-    return {
-        c: sorted(v for v in row[c] if v is not None) if row[c] is not None else []
-        for c in columns
-    }
+    row = df.agg(*[_value_set(df, c).alias(c) for c in columns]).collect()[0]
+    return {c: sorted(row[c]) for c in columns}
 
 
 def nunique(
@@ -159,49 +164,32 @@ def nunique(
     exact: bool = True,
 ) -> dict[str, int]:
     """Distinct-value count per column (iterable columns count distinct
-    *elements*). ``exact=True`` (default) matches a SQL oracle exactly;
-    ``exact=False`` is the 100 TB profile path — HyperLogLog++
-    (``approx_count_distinct``, default 5% rsd) in a SINGLE partial-
-    aggregated pass with NO ``Expand`` node: multi-column exact
-    countDistinct expands the input once per distinct column (xN data
-    amplification before the shuffle), while the sketches fold map-side
-    in one pass. Iterable columns in approx mode explode to elements
-    first (one extra bounded job per array column — catalogs have few)."""
+    *elements*, NA dropped).
+
+    ``exact=True`` (default) counts the sets :func:`unique` collects: the
+    ``size`` of each column's :func:`_value_set`, in one aggregate, so
+    ``nunique()[c] == len(unique()[c])`` by construction. As in
+    :func:`unique`, one column's set is merged in one task.
+
+    ``exact=False`` is the scale path: HyperLogLog++
+    (``approx_count_distinct``, default 5% rsd) over the same NaN-as-null
+    values, in a SINGLE partial-aggregated pass whose fixed-size sketches
+    fold map-side, so no task holds a column's distinct values. Iterable
+    columns explode to elements first (one extra bounded job per array
+    column — catalogs have few)."""
     columns = columns or df.columns
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    out: dict[str, int] = {}
-    aggs = []
-    scalar_cols = []
-    for c in columns:
-        if _is_array(dtypes[c]):
-            if exact:
-                # array_compact drops inner nulls after the flatten, matching
-                # unique()'s NA filter (and pandas nunique, which drops NA) —
-                # otherwise nunique could exceed len(unique(col)) by one
-                aggs.append(
-                    F.size(
-                        F.array_distinct(
-                            F.array_compact(F.flatten(F.collect_set(F.col(c))))
-                        )
-                    ).alias(c)
-                )
-                scalar_cols.append(c)
-            else:
-                row = (
-                    df.select(F.explode(c).alias("__e"))
-                    .agg(F.approx_count_distinct("__e").alias("n"))
-                    .collect()[0]
-                )
-                out[c] = int(row["n"])
-        else:
-            aggs.append(
-                F.countDistinct(F.col(c)).alias(c)
-                if exact
-                else F.approx_count_distinct(F.col(c)).alias(c)
-            )
-            scalar_cols.append(c)
-    if aggs:
-        row = df.agg(*aggs).collect()[0]
-        for c in scalar_cols:
-            out[c] = int(row[c])
+    if exact:
+        sizes = [F.size(_value_set(df, c)).alias(c) for c in columns]
+        return df.agg(*sizes).collect()[0].asDict()
+    arrays = [c for c in columns if _is_array(df.schema[c].dataType)]
+    out = {
+        c: df.select(F.explode(c).alias("__e"))
+        .agg(F.approx_count_distinct("__e"))
+        .collect()[0][0]
+        for c in arrays
+    }
+    scalars = [F.approx_count_distinct(_value(df, c)).alias(c)
+               for c in columns if c not in arrays]
+    if scalars:
+        out.update(df.agg(*scalars).collect()[0].asDict())
     return {c: out[c] for c in columns}

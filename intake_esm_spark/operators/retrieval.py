@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from intake_esm_spark.functions.text import words_array
+from intake_esm_spark.util import read_text_sidecar, write_text_sidecar
 
 
 def bm25_scores(
@@ -146,7 +147,6 @@ def write_inverted_index(
     import json as _json
 
     from intake_esm_spark.functions.text import salted_hash60
-    from intake_esm_spark.util import write_text_sidecar
 
     if n_term_buckets < 1:
         raise ValueError(f"n_term_buckets must be >= 1, got {n_term_buckets}")
@@ -210,16 +210,13 @@ def inverted_index_append(
     import json as _json
 
     from intake_esm_spark.functions.text import salted_hash60
-    from intake_esm_spark.util import write_text_sidecar
 
     if files_per_bucket is not None and files_per_bucket < 1:
         raise ValueError(
             f"files_per_bucket must be >= 1 or None, got {files_per_bucket}"
         )
     spark = new_docs.sparkSession
-    sidecar = _json.loads(
-        spark.read.text(f"{path}/_ii_stats").collect()[0][0]
-    )
+    sidecar = _json.loads(read_text_sidecar(spark, f"{path}/_ii_stats"))
     id_col, nb = sidecar["id_col"], sidecar["n_term_buckets"]
     base = new_docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), words_array(F.col(text_col)).alias("__w")
@@ -279,9 +276,7 @@ def bm25_topk_indexed(
 
     if not terms:
         raise ValueError("terms must be non-empty")
-    sidecar = _json.loads(
-        spark.read.text(f"{path}/_ii_stats").collect()[0][0]
-    )
+    sidecar = _json.loads(read_text_sidecar(spark, f"{path}/_ii_stats"))
     nb = sidecar["n_term_buckets"]
     id_col = sidecar["id_col"]
     uniq = list(dict.fromkeys(terms))

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from intake_esm_spark.util import read_text_sidecar, write_text_sidecar
+
 
 def l2_norm(col: F.Column) -> F.Column:
     return F.sqrt(
@@ -367,7 +369,6 @@ def write_ivf_index(
 
         centroids = kmeans_refine(corpus, centroids, iters=refine_iters, vec_col=vec_col)
     _write_assigned(corpus, centroids, path, id_col, vec_col, files_per_bucket, "overwrite")
-    from intake_esm_spark.util import write_text_sidecar
 
     sidecar = _json.dumps(
         {"centroids": centroids, "vec_col": vec_col, "id_col": id_col}
@@ -446,8 +447,6 @@ def write_ivf_index_int8(
     _write_assigned_int8(
         corpus, centroids, path, id_col, vec_col, files_per_bucket, "overwrite"
     )
-
-    from intake_esm_spark.util import write_text_sidecar
 
     sidecar = _json.dumps(
         {
@@ -549,7 +548,6 @@ def write_ivf_index_pq(
     _write_assigned_pq(
         corpus, centroids, codebooks, path, id_col, vec_col, files_per_bucket, "overwrite"
     )
-    from intake_esm_spark.util import write_text_sidecar
 
     sidecar = _json.dumps(
         {
@@ -650,7 +648,7 @@ def ivf_index_append(
     import json as _json
 
     spark = new_rows.sparkSession
-    sidecar = _json.loads(spark.read.text(f"{path}/_ivf_centroids").collect()[0][0])
+    sidecar = _json.loads(read_text_sidecar(spark, f"{path}/_ivf_centroids"))
     if sidecar.get("pq"):
         _write_assigned_pq(
             new_rows,
@@ -724,9 +722,7 @@ def ivf_topk_indexed(
 
     import numpy as np
 
-    sidecar = _json.loads(
-        spark.read.text(f"{path}/_ivf_centroids").collect()[0][0]
-    )
+    sidecar = _json.loads(read_text_sidecar(spark, f"{path}/_ivf_centroids"))
     id_col = id_col or sidecar["id_col"]
     vec_col = vec_col or sidecar["vec_col"]
     query_vec_col = query_vec_col or vec_col
@@ -1123,9 +1119,7 @@ def ivf_topk_rerank(
 
     from pyspark.sql import Window
 
-    sidecar = _json.loads(
-        spark.read.text(f"{path}/_ivf_centroids").collect()[0][0]
-    )
+    sidecar = _json.loads(read_text_sidecar(spark, f"{path}/_ivf_centroids"))
     id_col = id_col or sidecar["id_col"]
     vec_col = vec_col or sidecar["vec_col"]
     query_vec_col = query_vec_col or vec_col

@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from intake_esm_spark.functions.text import rolling_hashes, words_array
+from intake_esm_spark.util import read_text_sidecar, write_text_sidecar
 
 
 def _inline_report(
@@ -334,8 +335,6 @@ def write_window_snapshot(
     survive — the LSH stale-index failure mode at window grain)."""
     import json as _json
 
-    from intake_esm_spark.util import write_text_sidecar
-
     snap = duplicated_window_hashes(df, id_col, text_col, n, min_doc_freq)
     snap.write.mode("overwrite").parquet(f"{path}/windows")
     sidecar = _json.dumps(
@@ -367,9 +366,7 @@ def span_dedup_indexed(
     missing spans."""
     import json as _json
 
-    params = _json.loads(
-        spark.read.text(f"{path}/_span_params").collect()[0][0]
-    )
+    params = _json.loads(read_text_sidecar(spark, f"{path}/_span_params"))
     scheme = params.get("hash_scheme")
     if scheme != SPAN_HASH_SCHEME:
         detail = (

@@ -144,6 +144,49 @@ def test_group_summary_job_counts(spark, catalog_env, monkeypatch):
     assert len(profiles) == 1
 
 
+def test_profile_and_division_job_cuts(spark, catalog_env):
+    """Exact nunique counts the sets unique collects, so it launches no
+    more jobs than unique; require_all_on counts each group's tuples as
+    the size of one set, so its plan has one hash exchange (the groupBy
+    on the require_all_on columns) and the semi-join is broadcast."""
+    from intake_esm_spark.operators.division import apply_require_all_on
+    from intake_esm_spark.plans.query import Query
+
+    cat = open_esm_datastore(catalog_env, spark=spark)
+    sub = cat.search(experiment="CTRL")
+    assert _jobs(spark, sub.nunique) <= _jobs(spark, sub.unique)
+
+    q = Query.normalize(
+        {"experiment": ["CTRL", "20C"], "time_range": ["2000-2004", "2005-2009"]},
+        cat.df.columns,
+        "member_id",
+    )
+    divided = apply_require_all_on(cat.df, q, cat.iterable_columns)
+    plan = divided._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert divided.count() == 8
+
+
+def test_text_sidecar_round_trip_without_jobs(spark, tmp_path):
+    """read_text_sidecar reads a write_text_sidecar payload through the
+    Hadoop FS (no Spark job), and still loads a sidecar that a Spark text
+    write left as a part file under a hidden directory."""
+    from intake_esm_spark.util import read_text_sidecar, write_text_sidecar
+
+    payload = json.dumps({"hash_scheme": "x", "bands": 16})
+    path = str(tmp_path / "_params")
+    write_text_sidecar(spark, path, payload)
+    got = []
+    assert _jobs(spark, lambda: got.append(read_text_sidecar(spark, path))) == 0
+    assert got == [payload]
+
+    legacy = str(tmp_path / "_legacy")
+    spark.createDataFrame([(payload,)], "value string").coalesce(1).write.text(legacy)
+    assert json.loads(read_text_sidecar(spark, legacy)) == json.loads(payload)
+    with pytest.raises(FileNotFoundError):
+        read_text_sidecar(spark, str(tmp_path / "_missing"))
+
+
 def test_getitem_and_contains(spark, catalog_env):
     cat = open_esm_datastore(catalog_env, spark=spark)
     grp = cat["ocn.CTRL.pop.h"]

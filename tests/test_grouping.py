@@ -142,3 +142,30 @@ def test_nunique_approx_no_expand_and_close(spark):
     with redirect_stdout(buf):
         agg_df.explain("formatted")
     assert "Expand" not in buf.getvalue()
+
+
+def test_unique_nunique_one_definition_nan_and_arrays(spark):
+    """``unique`` and exact ``nunique`` read one set per column: NaN is NA
+    (the reference's dropna), 0.0 / -0.0 are one value, an array column's
+    inner nulls and empty arrays add nothing — across partitions, so the
+    per-partition sets are merged, not concatenated."""
+    nan = float("nan")
+    rows = [
+        (nan, ["a", None]),
+        (nan, []),
+        (0.0, None),
+        (-0.0, ["b", "a"]),
+        (None, [None]),
+        (1.5, ["c"]),
+    ]
+    df = spark.createDataFrame(rows, "d double, arr array<string>").repartition(3)
+    assert df.rdd.getNumPartitions() >= 3
+    uq = grouping.unique(df)
+    assert not any(v != v for v in uq["d"])  # no NaN
+    for values in uq.values():
+        assert len(set(values)) == len(values)
+    assert sorted(uq["d"]) == [0.0, 1.5]
+    assert uq["arr"] == ["a", "b", "c"]
+    nu = grouping.nunique(df)
+    assert nu == {c: len(v) for c, v in uq.items()}
+    assert grouping.nunique(df, exact=False) == nu
